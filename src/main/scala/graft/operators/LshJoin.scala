@@ -242,8 +242,11 @@ object LshJoin {
    * collisions (J4 analog: any shared simhash-bundle variant is a candidate).
    * `bucketObs` (optional) receives (total_buckets, paired_buckets,
    * salted_buckets) of the LSH band table on the same action that
-   * materializes the candidates — the A4 funnel stats the reference logs as
-   * its O(n²)→O(Σb²) reduction, with zero extra jobs.
+   * materializes the bucket phase — the A4 funnel stats the reference logs
+   * as its O(n²)→O(Σb²) reduction. Calling this method RUNS jobs: the
+   * bucket phase is an eager localCheckpoint (see saltedBucketPairs), and
+   * the observation rides that checkpoint, so callers should call it once
+   * per candidate set and reuse the result.
    */
   def candidates(sigs: Dataset[DocSig], cfg: DedupConfig,
                  bucketObs: Option[Observation] = None): Dataset[CandidatePair] = {

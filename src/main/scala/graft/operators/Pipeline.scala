@@ -233,11 +233,14 @@ object Pipeline {
     // via observe — no separate full-scan job before the pipeline starts
     // (that pre-job was pure serial time in the Amdahl budget). In resume
     // mode the hash was already computed up front and the signature stage
-    // may never scan the input, so the observation is skipped.
+    // may never scan the input, so the observation is skipped. It hashes
+    // the same columns as fingerprintAndCount, so both modes report one
+    // inputHash for one input.
     val turnsObs =
       if (pre.isDefined) turns
       else turns.observe(oIn,
-        bit_xor(xxhash64(col("conv_id"), col("turn_idx"), col("text"))).as("s"),
+        bit_xor(xxhash64(col("conv_id"), col("turn_idx"), col("text"),
+          col("role"), col("tool"))).as("s"),
         count(lit(1)).as("n"))
     // Stage boundaries are EAGER localCheckpoints, not bare persists: the
     // pipeline is self-join-heavy (bucket x/y, payload _a/_b, z-score edge

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.execution.{EmptyRelationExec, FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanHelper, LogicalQueryStage}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.functions.{Hashing, TextKernel}
@@ -257,6 +259,40 @@ object StreamingDedup {
   private def bandBucket(bkey: Column, storeBuckets: Int): Column =
     pmod(bkey, lit(storeBuckets.toLong)).cast("int")
 
+  /** Band rows of `fps` with their store `bucket`, spread so each bucket
+    * lands in exactly one task: a delta append or a compaction then writes
+    * ONE part file per touched bucket instead of one per (task, bucket).
+    * The partition count is explicit (REPARTITION_BY_NUM) on purpose — a
+    * by-column repartition is coalesced by AQE into a single task that
+    * writes every bucket file serially — and comes from the session's
+    * shuffle-partition setting, capped at storeBuckets (more tasks than
+    * buckets would sit idle). */
+  private def bucketedBands(fps: DataFrame, cfg: DedupConfig,
+                            storeBuckets: Int): DataFrame =
+    bandRows(fps, cfg)
+      .withColumn("bucket", bandBucket(col("bkey"), storeBuckets))
+      .repartition(
+        math.min(storeBuckets, fps.sparkSession.sessionState.conf.numShufflePartitions),
+        col("bucket"))
+
+  /** Band-store part files the EXECUTED candidate plan opened after bucket
+    * pruning, read from the file scan's driver-side `numFiles` metric (no
+    * extra job). The plan's only file scan is the band store; AQE or not,
+    * the helper walks into adaptive plans and query stages. When a stage
+    * comes back empty (no candidates), AQE swaps the plan above it for an
+    * EmptyRelationExec, and the executed stage with its scan then hangs off
+    * that node's logical plan. Only file-source (parquet seam) scans are
+    * counted: a DSv2 scan such as Iceberg's reads as 0. */
+  private def storeFilesScanned(executed: DataFrame): Long = {
+    val helper = new AdaptiveSparkPlanHelper {}
+    def files(plan: SparkPlan): Long = helper.collect(plan) {
+      case s: FileSourceScanExec => s.metrics("numFiles").value
+      case EmptyRelationExec(logical) =>
+        logical.collect { case q: LogicalQueryStage => files(q.physicalPlan) }.sum
+    }.sum
+    files(executed.queryExecution.executedPlan)
+  }
+
   /** Bucket-pruned view of the accumulated band store for a batch delta:
     * directory-level partition pruning on the delta's bucket set (≤
     * storeBuckets values, computed FROM the delta — one tiny distinct).
@@ -331,7 +367,11 @@ object StreamingDedup {
    * bucket(N, bkey) spec with manifest pruning); fingerprint evidence is
    * fetched ONLY for matched conv_ids (broadcast semi-join pushdown into
    * the log scan); the already-seen-pair check prunes the pairs table to
-   * rows touching matched convs before a broadcast anti-join. A
+   * rows touching matched convs before a broadcast anti-join. The delta's
+   * band rows are spread by bucket before they are checkpointed
+   * (`bucketedBands`), so the append adds at most ONE part file per touched
+   * bucket, and the ledgered count of scanned store files is read from the
+   * candidate join's scan metric rather than counted by a job of its own. A
    * conversation whose fingerprint grows across batches appends fresh band
    * rows; its stale rows only ever produce extra candidate ids, which the
    * evidence join re-scores against the LATEST fingerprints.
@@ -346,7 +386,6 @@ object StreamingDedup {
                        storeBuckets: Int = 256)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val bandsTbl = s"${storeTbl}_bands"
-    val logTbl = s"${pairsTbl}_batchlog"
     // Bucket-layout guard: the delta's bucket filter is only correct when
     // computed with the SAME modulus the store's rows were written with —
     // a restart passing a different storeBuckets would silently prune away
@@ -421,40 +460,37 @@ object StreamingDedup {
         }
         if (!alreadyApplied) {
         if (nDelta > 0) {
-          val deltaBands = bandRows(delta, cfg)
-            .withColumn("bucket", bandBucket(col("bkey"), storeBuckets))
-            .localCheckpoint(true)
+          val deltaBands = bucketedBands(delta, cfg, storeBuckets).localCheckpoint(true)
           val nDeltaBands = deltaBands.count()
           val dNew = broadcast(deltaBands
             .select(col("conv_id").as("conv_new"), col("bkey")))
           // delta vs maintained band store (bucket-pruned scan-only big
           // side) + delta vs itself (dups arriving in the same batch must
-          // still pair). The pruned scan's actual file count is ledgered —
-          // it is the bounded-I/O evidence; counting distinct file names
-          // over the pruned view reads zero data columns (footers only).
+          // still pair).
           val deltaBuckets = deltaBands.select("bucket").distinct()
             .collect().map(_.getInt(0)).toSeq
-          var nStoreFiles = 0L
           val crossIds =
-            if (provider.exists(spark, bandsTbl)) {
-              val pruned = prunedBandStore(
-                provider.read(spark, bandsTbl), deltaBuckets)
-              nStoreFiles = pruned.select(input_file_name().as("f"))
-                .distinct().count()
-              dNew.join(pruned.toDF("conv_old", "bkey"), "bkey")
+            if (provider.exists(spark, bandsTbl))
+              dNew.join(prunedBandStore(provider.read(spark, bandsTbl), deltaBuckets)
+                .toDF("conv_old", "bkey"), "bkey")
                 .select(col("conv_new"), col("conv_old"))
-            } else spark.emptyDataset[(String, String)]
+            else spark.emptyDataset[(String, String)]
               .toDF("conv_new", "conv_old")
           val selfIds = dNew
             .join(deltaBands.select(col("conv_id").as("conv_old"), col("bkey")),
               "bkey")
             .select(col("conv_new"), col("conv_old"))
-          val candIds = crossIds.unionByName(selfIds)
+          val candQ = crossIds.unionByName(selfIds)
             .filter(col("conv_new") =!= col("conv_old"))
             .select(
               least(col("conv_new"), col("conv_old")).as("conv_a"),
               greatest(col("conv_new"), col("conv_old")).as("conv_b"))
-            .distinct().localCheckpoint(true)
+            .distinct()
+          val candIds = candQ.localCheckpoint(true)
+          // the pruned scan's actual file count is ledgered — it is the
+          // bounded-I/O evidence — and comes from the scan metric of the
+          // checkpoint job that just ran, not from a separate count job
+          val nStoreFiles = storeFilesScanned(candQ)
           val nCand = candIds.count()
           val nFresh = if (nCand > 0) {
             // latest fingerprints for EXACTLY the convs in play: the log is
@@ -518,13 +554,12 @@ object StreamingDedup {
         .localCheckpoint(true)
       provider.write(latest, storeTbl)
       // rebuilt in the SAME bucket layout the incremental appends use, and
-      // repartitioned so each bucket lands in exactly one task → ONE part
-      // file per bucket: after compaction a delta's pruned scan opens at
-      // most |delta buckets| files no matter how large the store has grown
-      val bands = bandRows(latest, cfg)
-        .withColumn("bucket", bandBucket(col("bkey"), storeBuckets))
-        .repartition(storeBuckets, col("bucket"))
-        .localCheckpoint(true)
+      // spread by bucketedBands so each bucket lands in exactly one task →
+      // ONE part file per bucket, written by min(storeBuckets, shuffle
+      // partitions) tasks rather than one task per bucket: after
+      // compaction a delta's pruned scan opens at most |delta buckets|
+      // files no matter how large the store has grown
+      val bands = bucketedBands(latest, cfg, storeBuckets).localCheckpoint(true)
       provider.writePartitioned(bands, bandsTbl, Seq("bucket"))
       // compaction is the sanctioned re-layout point: it rewrites EVERY
       // band row under the new modulus, so the meta moves with it

@@ -155,6 +155,26 @@ class PipelineSmokeSpec extends SparkSpec {
     assert(a == b, s"onlySa=${(a -- b).take(3)} onlyLcs=${(b -- a).take(3)}")
   }
 
+  test("eager and pipelined runs report one inputHash; a role-only edit changes it") {
+    import spark.implicits._
+    def ts(i: Int) = new java.sql.Timestamp(1700000000000L + i * 1000L)
+    def text(seed: Int) =
+      (0 until 30).map(i => ConversationGen.word(seed + i * 13 % 700)).mkString(" ")
+    val rows = (0 until 6).flatMap { c =>
+      Seq(Turn(s"h$c", 0, "user", text(100 * c), null, ts(0)),
+        Turn(s"h$c", 1, "tool", text(100 * c + 50), "search", ts(1)))
+    }
+    val eager = Pipeline.run(spark.createDataset(rows), DedupConfig.balanced, runId = "hash_e")
+    val piped = Pipeline.runPipelined(spark.createDataset(rows), DedupConfig.balanced,
+      runId = "hash_p")
+    assert(eager.inputHash == piped.inputHash,
+      s"run=${eager.inputHash} runPipelined=${piped.inputHash}")
+    val roleEdit = rows.map(t => if (t.conv_id == "h0" && t.turn_idx == 0) t.copy(role = "system") else t)
+    val edited = Pipeline.runPipelined(spark.createDataset(roleEdit), DedupConfig.balanced,
+      runId = "hash_r")
+    assert(edited.inputHash != piped.inputHash, "a role-only edit must change the input hash")
+  }
+
   test("determinism: two runs produce identical tier assignments") {
     import spark.implicits._
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)

@@ -333,6 +333,98 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("band store: one part file per touched bucket per batch and per compaction; scanned-file count matches the filesystem") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.model.DedupConfig
+    val cfg = DedupConfig.balanced
+    def text(seed: Int) =
+      (0 until 40).map(i => graft.sources.ConversationGen.word(seed + i * 7 % 800)).mkString(" ")
+    // parquet part files of the band table, per bucket=N dir
+    def bucketFiles(dir: String): Map[Int, Set[String]] =
+      Option(new java.io.File(s"$dir/fp_store_bands").listFiles()).getOrElse(Array.empty)
+        .filter(d => d.isDirectory && d.getName.startsWith("bucket="))
+        .map(d => d.getName.stripPrefix("bucket=").toInt ->
+          d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSet)
+        .toMap
+    // one applied batch of fresh convs: at most one new file per bucket dir,
+    // and the logged scan count equals the parquet files that the batch's
+    // buckets held before it ran; returns that count
+    def checkBatch(provider: graft.sources.ParquetDirProvider, dir: String,
+                   before: Map[Int, Set[String]], convs: Seq[String], batchId: Long): Long = {
+      bucketFiles(dir).foreach { case (b, fs) =>
+        val added = fs -- before.getOrElse(b, Set.empty)
+        assert(added.size <= 1, s"batch $batchId added ${added.size} files to bucket=$b")
+      }
+      val probed = provider.read(spark, "fp_store_bands")
+        .filter($"conv_id".isin(convs: _*)).select($"bucket").distinct().as[Int].collect()
+      val expected = probed.map(b => before.getOrElse(b, Set.empty).size.toLong).sum
+      val logged = provider.read(spark, "dup_pairs_batchlog").filter($"batch_id" === batchId)
+        .select($"n_store_files_scanned").as[Long].collect().toSeq
+      assert(logged == Seq(expected),
+        s"batch $batchId logged $logged scanned files, filesystem says $expected")
+      expected
+    }
+    def checkCompacted(provider: graft.sources.ParquetDirProvider, dir: String): Unit = {
+      val files = bucketFiles(dir)
+      val nonEmpty = provider.read(spark, "fp_store_bands").select($"bucket").distinct()
+        .as[Int].collect().toSet
+      assert(files.keySet == nonEmpty, "every non-empty bucket has a dir, and only those")
+      files.foreach { case (b, fs) =>
+        assert(fs.size == 1, s"compaction left ${fs.size} files in bucket=$b") }
+    }
+    val batches = Seq(0 until 6, 6 until 12, 12 until 18).map(_.map(i => s"s$i"))
+    def turns(ids: Seq[String]) =
+      ids.map(id => turn(id, 0, text(1000 * id.drop(1).toInt + 17)))
+
+    // through a running stream (its micro-batches run with AQE off)
+    val sDir = java.nio.file.Files.createTempDirectory("graft_onefile_s_").toString
+    val sProv = new graft.sources.ParquetDirProvider(sDir, "")
+    val input = MemoryStream[Turn]
+    val q = StreamingDedup.startIncremental(
+      StreamingDedup.incrementalFingerprints(input.toDS()),
+      sProv, "fp_store", "dup_pairs", cfg)
+    val streamScanned = try {
+      val scanned = batches.zipWithIndex.map { case (ids, i) =>
+        val before = bucketFiles(sDir)
+        input.addData(turns(ids): _*)
+        q.processAllAvailable()
+        checkBatch(sProv, sDir, before, ids, i.toLong)
+      }
+      StreamingDedup.compactStore(spark, sProv, "fp_store", "dup_pairs", cfg)
+      checkCompacted(sProv, sDir)
+      val before = bucketFiles(sDir)
+      input.addData(turns(Seq("s18", "s19")): _*)
+      q.processAllAvailable()
+      scanned :+ checkBatch(sProv, sDir, before, Seq("s18", "s19"), batches.length.toLong)
+    } finally q.stop()
+    assert(streamScanned.count(_ > 0) >= 3, s"scans must open files: $streamScanned")
+
+    // through direct applyBatch calls on the test session (AQE on)
+    val dDir = java.nio.file.Files.createTempDirectory("graft_onefile_d_").toString
+    val dProv = new graft.sources.ParquetDirProvider(dDir, "")
+    val directScanned = batches.zipWithIndex.map { case (ids, i) =>
+      val before = bucketFiles(dDir)
+      StreamingDedup.applyBatch(
+        StreamingDedup.incrementalFingerprints(spark.createDataset(turns(ids))).toDF(),
+        i.toLong, dProv, "fp_store", "dup_pairs", cfg, 3, 256)
+      checkBatch(dProv, dDir, before, ids, i.toLong)
+    }
+    assert(directScanned.count(_ > 0) >= 2, s"scans must open files: $directScanned")
+    // the batches above find no candidates (AQE turns the plan above the
+    // empty stage into an empty relation); a dup of s0 covers the other case
+    val before = bucketFiles(dDir)
+    StreamingDedup.applyBatch(
+      StreamingDedup.incrementalFingerprints(
+        spark.createDataset(Seq(turn("d0", 0, text(17))))).toDF(),
+      batches.length.toLong, dProv, "fp_store", "dup_pairs", cfg, 3, 256)
+    assert(checkBatch(dProv, dDir, before, Seq("d0"), batches.length.toLong) > 0)
+    assert(dProv.read(spark, "dup_pairs").select($"conv_a", $"conv_b")
+      .as[(String, String)].collect().contains(("d0", "s0")))
+    StreamingDedup.compactStore(spark, dProv, "fp_store", "dup_pairs", cfg)
+    checkCompacted(dProv, dDir)
+  }
+
   test("bucket-layout guard: mismatched storeBuckets fails loudly, compaction re-layouts") {
     val dir = java.nio.file.Files.createTempDirectory("graft_meta_").toString
     val provider = new graft.sources.ParquetDirProvider(dir, "")
