@@ -1,12 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.model._
 
 /**
  * End-to-end dedup pipeline orchestration with checkpoint/resume and
- * per-stage funnel metrics (SURVEY.md §3.1 Spark shape, §2.1 S4/S5).
+ * per-stage funnel metrics (SURVEY.md §3.1 Spark shape, §2.1 S4/S5). One
+ * stage runner, `runPipelined`, wires the stages; `run` and `runOnTable`
+ * forward to it.
  *
  * Resume: each stage optionally persists to
  *   {checkpointDir}/{cacheVersion}-{configHash}[-g{groupsHash}]/{inputHash}/{stage}
@@ -21,7 +23,7 @@ import graft.model._
  * the namespace too — the candidates stage output depends on it.
  *
  * Metrics mirror PipelineMetrics (ai_...AUTO.py:390-452): per-stage
- * input/output counts + duration, written as JSON next to the checkpoints
+ * input/output counts + duration, written as a table next to the checkpoints
  * (per-run lineage, north_rule requirement).
  */
 object Pipeline {
@@ -128,50 +130,26 @@ object Pipeline {
   /** `ns` = {namespaceFor(...)}/{inputHash}. */
   private def stageTable(ns: String, stage: String) = s"$ns/$stage"
 
-  /** Run (or resume) one stage: load checkpoint if present, else compute and
-    * persist. Returns the stage Dataset plus whether it was a cache hit.
-    * On a fresh compute, PER-PARTITION lineage (file → row count) is written
-    * next to the stage table (north_rule per-partition/per-snapshot lineage;
-    * with an Iceberg provider these become per-snapshot manifest analogs). */
-  private def stage[T: org.apache.spark.sql.Encoder](
-      spark: SparkSession, io: Option[graft.sources.TableProvider], ns: String,
-      hash: String, name: String)(compute: => Dataset[T]): (Dataset[T], Boolean) = {
-    io match {
-      case Some(p) =>
-        val tbl = stageTable(ns, name)
-        if (p.exists(spark, tbl)) {
-          (p.read(spark, tbl).as[T], true)
-        } else {
-          p.write(compute.toDF(), tbl)
-          val back = p.read(spark, tbl)
-          val lineage = back
-            .groupBy(input_file_name().as("partition_file"))
-            .agg(count(lit(1)).as("rows"))
-            .withColumn("stage", lit(name))
-            .withColumn("input_hash", lit(hash))
-          p.write(lineage, stageTable(ns, s"lineage_$name"))
-          (p.read(spark, tbl).as[T], false)
-        }
-      case None => (compute.persist(), false) // share work across downstream actions
-    }
-  }
-
   /**
-   * Pipelined variant for throughput paths (Bench/ScalingBench): ONE
-   * materializing action per stage instead of a per-stage count barrier —
-   * funnel metrics ride the same action via Dataset.observe (zero extra
-   * jobs). Amdahl motivation: at local[2]→local[8] the per-stage driver
-   * barriers were ~40% of wall time, capping scaling efficiency at ~0.47.
+   * The pipeline's single stage runner — `run` and `runOnTable` forward
+   * here. ONE materializing action per stage instead of a per-stage count
+   * barrier — funnel metrics ride the same action via Dataset.observe (zero
+   * extra jobs). Amdahl motivation: at local[2]→local[8] the per-stage
+   * driver barriers were ~40% of wall time, capping scaling efficiency at
+   * ~0.47.
    *
-   * `checkpointDir` enables checkpoint/resume on THIS path too (round-2 gap:
-   * resume existed only in the eager mode): stage tables are written through
-   * the TableProvider ASYNCHRONOUSLY (the write overlaps the next stage's
-   * compute — durability without serial wall), keyed by the same
-   * (cacheVersion, inputHash) namespace as the eager mode, so the two modes
-   * resume each other's checkpoints. A killed run restarts from the last
-   * completed stage. Resume-mode pays one up-front fingerprint scan in place
-   * of the observation-carried hash (the skip has to be decided BEFORE the
-   * first action).
+   * `checkpointDir` enables checkpoint/resume: stage tables are written
+   * through the TableProvider ASYNCHRONOUSLY (the write overlaps the next
+   * stage's compute — durability without serial wall), keyed by the
+   * config-aware (cacheVersion, inputHash) namespace, with per-partition
+   * lineage (file → row count) next to each freshly written stage table.
+   * A killed run restarts from the last completed stage. Resume-mode pays
+   * one up-front fingerprint scan in place of the observation-carried hash
+   * (the skip has to be decided BEFORE the first action).
+   *
+   * `hashOverride` replaces the content fingerprint as the checkpoint key
+   * and as `Result.inputHash` — `runOnTable` passes the provider's snapshot
+   * id, so resume-mode pays a row count instead of the fingerprint scan.
    *
    * `groups` + cfg.groupGap wire the F2 same/adjacent-group suppression
    * between candidates and verification (reference default OFF).
@@ -189,7 +167,8 @@ object Pipeline {
                    cfg: DedupConfig = DedupConfig.balanced,
                    runId: String = "run",
                    groups: Option[DataFrame] = None,
-                   checkpointDir: Option[String] = None): Result = {
+                   checkpointDir: Option[String] = None,
+                   hashOverride: Option[String] = None): Result = {
     val spark = turns.sparkSession
     import spark.implicits._
     import org.apache.spark.sql.Observation
@@ -206,7 +185,8 @@ object Pipeline {
     import scala.concurrent.duration.Duration
 
     val io = checkpointIO(checkpointDir)
-    val pre: Option[(String, Long)] = io.map(_ => fingerprintAndCount(turns))
+    val pre: Option[(String, Long)] = io.map(_ =>
+      hashOverride.fold(fingerprintAndCount(turns))(h => (h, turns.count())))
     // config-aware checkpoint namespace (see stageTable scaladoc)
     val nsOpt: Option[String] = pre.map { case (h, _) =>
       s"${namespaceFor(cfg, groupsFingerprint(groups, cfg))}/$h"
@@ -234,8 +214,8 @@ object Pipeline {
     // (that pre-job was pure serial time in the Amdahl budget). In resume
     // mode the hash was already computed up front and the signature stage
     // may never scan the input, so the observation is skipped. It hashes
-    // the same columns as fingerprintAndCount, so both modes report one
-    // inputHash for one input.
+    // the same columns as fingerprintAndCount, so runs with and without a
+    // checkpoint dir report one inputHash for one input.
     val turnsObs =
       if (pre.isDefined) turns
       else turns.observe(oIn,
@@ -321,7 +301,7 @@ object Pipeline {
     val totalMs = (System.nanoTime() - t0) / 1000000L
     val ts = java.time.Instant.now.toString
     def n(o: Observation) = o.get("n").asInstanceOf[Long]
-    val hash = pre.map(_._1).getOrElse(
+    val hash = pre.map(_._1).orElse(hashOverride).getOrElse(
       f"${oIn.get("s").asInstanceOf[Long]}%016x_${n(oIn)}")
     val nTurns = pre.map(_._2).getOrElse(n(oIn))
     def tag(stage: String, metric: String) =
@@ -367,93 +347,15 @@ object Pipeline {
                  runId: String = "run"): Result = {
     import spark.implicits._
     val turns = io.read(spark, table).as[Turn]
-    run(turns, cfg, checkpointDir, runId,
+    runPipelined(turns, cfg, runId, checkpointDir = checkpointDir,
       hashOverride = io.snapshotFingerprint(spark, table))
   }
 
+  /** Alias of `runPipelined`, kept for callers that pass the checkpoint
+    * dir positionally. */
   def run(turns: Dataset[Turn], cfg: DedupConfig = DedupConfig.balanced,
           checkpointDir: Option[String] = None,
           runId: String = "run",
-          hashOverride: Option[String] = None,
-          groups: Option[DataFrame] = None): Result = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    val io = checkpointIO(checkpointDir)
-    val metrics = scala.collection.mutable.ArrayBuffer[StageMetric]()
-
-    // Count AFTER stage() so the action materializes the persisted/
-    // checkpointed Dataset exactly once (counting the un-persisted plan
-    // first would compute every stage twice).
-    def timedCount[T](stageName: String, inputCount: Long, ds: Dataset[T],
-                      cached: Boolean): Long = {
-      val t0 = System.nanoTime()
-      val n = ds.count() // materialize + funnel count (A4 analog)
-      metrics += StageMetric(runId, stageName + (if (cached) ":cached" else ""),
-        inputCount, n, (System.nanoTime() - t0) / 1000000L,
-        java.time.Instant.now.toString)
-      n
-    }
-
-    // input is consumed by fingerprint, count, and reassembly — cache it
-    // (no-op if the caller already persisted the same plan)
-    if (turns.storageLevel == org.apache.spark.storage.StorageLevel.NONE) turns.persist()
-    val (hash, nTurns) = hashOverride match {
-      case Some(h) => (h, turns.count()) // snapshot-id keying: no hash scan
-      case None => fingerprintAndCount(turns)
-    }
-    val ns = s"${namespaceFor(cfg, groupsFingerprint(groups, cfg))}/$hash"
-
-    val (sigs, sigsHit) = stage(spark, io, ns, hash, "sigs") {
-      Signatures.compute(Reassembly.assemble(turns, cfg.maskToolPayloads), cfg)
-    }
-    val nDocs = timedCount("signatures", nTurns, sigs, sigsHit)
-
-    val oBuckets = org.apache.spark.sql.Observation()
-    val (cands, candsHit) = stage(spark, io, ns, hash, "candidates") {
-      val raw = LshJoin.candidates(sigs, cfg, Some(oBuckets))
-      (groups, cfg.groupGap) match {
-        case (Some(g), Some(gap)) => LshJoin.suppressGroups(raw, g, gap)
-        case _ => raw
-      }
-    }
-    val nCands = timedCount("candidates", nDocs, cands, candsHit)
-    val buck = bucketRow(oBuckets, fresh = !candsHit) // empty on checkpoint hit
-    if (buck.nonEmpty) {
-      def bl(k: String) = buck(k).asInstanceOf[Long]
-      val ts = java.time.Instant.now.toString
-      metrics += StageMetric(runId, "lsh_buckets_paired",
-        bl("total_buckets"), bl("paired_buckets"), -1L, ts)
-      metrics += StageMetric(runId, "lsh_buckets_salted",
-        bl("total_buckets"), bl("salted_buckets"), -1L, ts)
-    }
-
-    val (verified, verHit) = stage(spark, io, ns, hash, "verified") {
-      Verification.verify(cands, sigs, cfg)
-    }
-    val nVer = timedCount("verified", nCands, verified, verHit)
-
-    val (tiered, tierHit) = stage(spark, io, ns, hash, "tiered") {
-      TierGate(verified, cfg, Some(IntraDup.convProfile(turns)),
-        pairCountHint = Some(nVer))
-    }
-    timedCount("tiered", nVer, tiered, tierHit)
-
-    val dupEdges = tiered.filter($"tier" === "A" || $"tier" === "B")
-      .select($"conv_a", $"conv_b")
-    val nEdges = dupEdges.count()
-    val (clusters, ccHit) = stage(spark, io, ns, hash, "clusters") {
-      ConnectedComponents.cluster(dupEdges.toDF(), cfg.ccMaxIters,
-        edgeCountHint = Some(nEdges))
-    }
-    timedCount("clusters", nEdges, clusters, ccHit)
-
-    io.foreach { p =>
-      // run lineage next to the stage checkpoints (S5/A4, north_rule
-      // per-snapshot lineage) — same provider, same namespace
-      p.write(spark.createDataset(metrics.toSeq).coalesce(1).toDF(),
-        stageTable(ns, s"run_metrics_$runId"))
-    }
-
-    Result(hash, sigs, cands, verified, tiered, clusters, metrics.toSeq)
-  }
+          groups: Option[DataFrame] = None): Result =
+    runPipelined(turns, cfg, runId, groups, checkpointDir)
 }

@@ -34,6 +34,10 @@ object SuffixSpans {
 
   private final val PackBits = 21 // 3×21 = 63 bits: rank | rank2+1 | index
   private final val PackMax = 1 << PackBits
+  /** Largest value range the round-0 counting sort takes: the UTF-16 char
+    * alphabet (2¹⁶) plus up to 2¹⁶ negative per-doc sentinels, so every
+    * char input counting-sorts while `cnt0` stays O(alphabet), not O(n). */
+  private[graft] final val CountSortMaxRange = 1 << 17
 
   /** Generalized suffix array over `s` (doubling, O(n log n) rounds of one
     * primitive sort each). Values of `s` may be any ints (negative
@@ -71,7 +75,7 @@ object SuffixSpans {
     // the final SA is unique anyway (sentinels make all suffixes distinct).
     // Large ranges (arbitrary int alphabets) keep the packed sort.
     val range = maxV.toLong - minV + 1
-    if (range <= math.max(1024L, 4L * n)) {
+    if (range <= math.min(CountSortMaxRange, math.max(1024L, 4L * n))) {
       val cnt0 = new Array[Int](range.toInt + 1)
       i = 0
       while (i < n) { cnt0(rank(i) + 1) += 1; i += 1 }

@@ -88,6 +88,31 @@ class ResumeSpec extends SparkSpec {
     assert(r3.metrics.exists(_.stage == "tiered:cached"))
   }
 
+  test("hashOverride keys the checkpoint namespace with no content scan") {
+    import spark.implicits._
+    val dir = tmpDir()
+    val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
+    val cfg = DedupConfig.balanced
+    val r1 = Pipeline.runPipelined(turns, cfg, runId = "s1",
+      checkpointDir = Some(dir), hashOverride = Some("snap_1"))
+    assert(r1.inputHash == "snap_1")
+    val base = s"$dir/${Pipeline.namespaceFor(cfg)}/snap_1"
+    Seq("sigs", "candidates", "verified", "tiered").foreach { st =>
+      assert(Files.exists(java.nio.file.Paths.get(s"$base/$st/_SUCCESS")), s"missing $st")
+    }
+    // edited text under the SAME snapshot id: the override, not the
+    // content, keys the namespace, so every stage resumes
+    val edited = turns.map(t => if (t.turn_idx == 0) t.copy(text = t.text + " edited") else t)
+    assert(Pipeline.inputFingerprint(edited) != Pipeline.inputFingerprint(turns))
+    val r2 = Pipeline.runPipelined(edited, cfg, runId = "s2",
+      checkpointDir = Some(dir), hashOverride = Some("snap_1"))
+    assert(r2.inputHash == "snap_1")
+    Seq("signatures", "candidates", "verified", "tiered").foreach { st =>
+      assert(r2.metrics.exists(_.stage == s"$st:cached"),
+        s"expected $st cache hit; metrics=${r2.metrics.map(_.stage)}")
+    }
+  }
+
   test("different cacheVersion or input invalidates the checkpoint") {
     val dir = tmpDir()
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)

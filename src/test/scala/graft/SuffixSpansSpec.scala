@@ -85,6 +85,22 @@ class SuffixSpansSpec extends SparkSpec {
     (0 until sa.length - 1).foreach(i => assert(cmpSuffix(sa(i), sa(i + 1))))
   }
 
+  test("value range between the counting-sort cap and 4n sorts like a naive suffix sort") {
+    val cap = SuffixSpans.CountSortMaxRange
+    val n = cap / 4 + 8192
+    val range = cap + 4096
+    assert(range > cap && range.toLong < 4L * n)
+    val rng = new graft.sources.ConversationGen.Rng(0x5AFE)
+    val s = Array.tabulate(n)(_ => rng.nextInt(range))
+    s(0) = 0; s(n - 1) = range - 1 // pin the full value range
+    val naive = s.indices.sortWith { (i, j) =>
+      var a = i; var b = j
+      while (a < n && b < n && s(a) == s(b)) { a += 1; b += 1 }
+      if (b == n) false else if (a == n) true else s(a) < s(b)
+    }
+    assert(SuffixSpans.suffixArray(s).toSeq == naive)
+  }
+
   test("spansForPairs: distributed spans match per-group computation") {
     import spark.implicits._
     val shared = "a long exactly repeated span of text that both conversations contain verbatim"
