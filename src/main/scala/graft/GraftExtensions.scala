@@ -6,12 +6,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.{DotArr, Hamming64, HyperplaneSig, JaccardSortedExpr, MinHashSig, MinhashEst32Expr, MinhashEst8Expr, MinhashEstExpr, PackLowBytes, SimHash64}
 
 /**
- * SparkSessionExtensions entry point — the cluster-deploy path for the
- * custom signature expressions (SURVEY.md §2.11): ship the library jar and
- * set `--conf spark.sql.extensions=graft.GraftExtensions`; every session on
- * the cluster then resolves `simhash64` / `hamming64` / `jaccard_sorted` /
- * `minhash_sig` in SQL without per-session registration calls (the
- * programmatic equivalent is graft.functions.GraftFunctions.register).
+ * SparkSessionExtensions entry point and the ONE list of SQL functions
+ * (SURVEY.md §2.11). Cluster deploy: ship the library jar and set
+ * `--conf spark.sql.extensions=graft.GraftExtensions`; every session on the
+ * cluster then resolves these functions in SQL without per-session calls.
+ * graft.functions.GraftFunctions.register applies this same list to one
+ * existing session.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -37,9 +37,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectFunction((FunctionIdentifier("minhash_est"),
       info("minhash_est", "minhash_est(a, b) - fraction of agreeing MinHash positions"),
       (es: Seq[Expression]) => MinhashEstExpr(es(0), es(1))))
-    // full parity with GraftFunctions.register — the cluster path must
-    // resolve every function the per-session path does, including the
-    // newer b-bit minwise and sign-LSH kernels
     ext.injectFunction((FunctionIdentifier("minhash_est32"),
       info("minhash_est32", "minhash_est32(a, b) - b-bit minwise estimate over 32-bit-truncated signatures"),
       (es: Seq[Expression]) => MinhashEst32Expr(es(0), es(1))))

@@ -123,10 +123,6 @@ object SparkEntry {
     * shuffle. The single-file doc scan is spread before the tokenizer so
     * the normalize+split+hash work parallelizes instead of running in one
     * scan task. */
-  /** Dev plan/timing access for the un-memoized jaccard DAG (tools). */
-  private[graft] def ngramJaccardPlan(s: SparkSession, d: String): DataFrame =
-    ngramJaccard(s, d)
-
   private def ngramJaccard(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val parts = s.sessionState.conf.numShufflePartitions

@@ -661,7 +661,7 @@ object LcsSpanStats {
 /** Column-API facade + SQL registration for the custom expressions. */
 object GraftFunctions {
   import org.apache.spark.sql.SparkSession
-  import org.apache.spark.sql.graft.Bridge.{column, expression}
+  import org.apache.spark.sql.graft.Bridge.{applyFunctionInjections, column, expression}
 
   def simhash64(c: Column): Column = column(SimHash64(expression(c)))
   def minhash_sig(c: Column, k: Int = 5, numPerms: Int = 128, seed: Long = 123L): Column =
@@ -698,18 +698,11 @@ object GraftFunctions {
   def sketch32(c: Column): Column = column(Sketch32Expr(expression(c)))
   def blocks32(c: Column): Column = column(Blocks32Expr(expression(c)))
 
-  /** Register for SQL use: SELECT simhash64(text) FROM docs. */
+  /** Register for SQL use: SELECT simhash64(text) FROM docs. Injects the
+    * one function list in graft.GraftExtensions into this session. */
   def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64", es => SimHash64(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("hamming64", es => Hamming64(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("jaccard_sorted", es => JaccardSortedExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_sig", es => MinHashSig(es.head, 5, 128, 123L), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_arr", es => DotArr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_est", es => MinhashEstExpr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_est32", es => MinhashEst32Expr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("pack_low_bytes", es => PackLowBytes(es.head), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_est8", es => MinhashEst8Expr(es(0), es(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("hyperplane_sig", es => HyperplaneSig(es.head, 8, 7L), "scala_udf")
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.GraftExtensions()(ext)
+    applyFunctionInjections(ext, spark)
   }
 }

@@ -38,10 +38,11 @@ object TierGate {
 
   /** Per-endpoint (mu, sigma) of minhash_est over every incident pair —
     * the ONE stats definition both the fused attachAttrs pass and the
-    * separate withZScore baseline build on (sharing it is what keeps the
-    * TierWall fused-vs-separate comparison honest: same semantics by
-    * construction, different join plans). Endpoint stats must see the edge
-    * from BOTH sides: explode to (endpoint, score) and aggregate. */
+    * separate withZScore baseline build on (sharing it keeps any
+    * fused-vs-separate comparison, TierGateSpec's parity test included,
+    * honest: same semantics by construction, different join plans).
+    * Endpoint stats must see the edge from BOTH sides: explode to
+    * (endpoint, score) and aggregate. */
   private def endpointStats(pairs: Dataset[VerifiedPair]): DataFrame = {
     val edges = pairs.select(col("conv_a").as("ep"), col("minhash_est").as("s"))
       .unionAll(pairs.select(col("conv_b").as("ep"), col("minhash_est").as("s")))
@@ -64,8 +65,9 @@ object TierGate {
       .when(col("ct_a") === col("ct_b"), col("ct_a"))
       .otherwise("cross")
 
-  /** Attach clip_z_analog via the separate two-join pass (TierWall's
-    * baseline; Pipeline runs the fused attachAttrs). */
+  /** Attach clip_z_analog via the separate two-join pass (the reference
+    * TierGateSpec checks the fused attachAttrs against; Pipeline runs the
+    * fused pass). */
   def withZScore(pairs: Dataset[VerifiedPair]): DataFrame = {
     val stats = endpointStats(pairs)
     // SHUFFLE_HASH on the stats side: Catalyst cannot see that the final

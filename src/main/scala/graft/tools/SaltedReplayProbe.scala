@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -23,13 +22,7 @@ import java.nio.file.{Files, Paths}
 object SaltedReplayProbe {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/salted_probe")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Bench.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     import spark.implicits._
     new java.io.File(outDir).mkdirs()
 

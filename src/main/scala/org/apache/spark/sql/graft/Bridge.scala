@@ -27,4 +27,9 @@ object Bridge {
   def applyFunctionInjections(ext: org.apache.spark.sql.SparkSessionExtensions,
                               spark: org.apache.spark.sql.SparkSession): Unit =
     ext.registerFunctions(spark.sessionState.functionRegistry)
+
+  /** Block until every listener has seen every event posted so far
+    * (`listenerBus` is private[spark]). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -33,6 +33,10 @@ class ExpressionsSpec extends SparkSpec {
     val sig = spark.sql("SELECT minhash_sig(text) AS s FROM tdocs")
       .collect().head.getSeq[Long](0)
     assert(sig.length == 128)
+    val all = Seq("simhash64", "hamming64", "jaccard_sorted", "minhash_sig",
+      "dot_arr", "minhash_est", "minhash_est32", "pack_low_bytes",
+      "minhash_est8", "hyperplane_sig")
+    assert(all.filterNot(spark.catalog.functionExists) == Nil)
   }
 
   test("GraftExtensions injects functions (spark.sql.extensions deploy path)") {
