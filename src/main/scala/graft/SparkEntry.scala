@@ -60,6 +60,10 @@ object SparkEntry {
   private[graft] def evictMemos(): Unit = {
     pipeCache.clear(); corpusCache.clear(); jacCache.clear()
   }
+  /** Drops one (session, sf dir)'s n-gram Jaccard memo, so the next query
+    * that reads it pays the self-join again (Profile's cold samples). */
+  private[graft] def evictJaccardMemo(spark: SparkSession, sfDir: String): Unit =
+    Option(jacCache.remove((spark, sfDir))).foreach(_.unpersist())
   private[graft] def memoSize: Int =
     pipeCache.size + corpusCache.size + jacCache.size
   @volatile private var hookedAppId: String = null

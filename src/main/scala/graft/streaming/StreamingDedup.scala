@@ -250,12 +250,29 @@ object StreamingDedup {
                        n_cand_ids: Long, n_new_pairs: Long,
                        n_store_files_scanned: Long, ts: String)
 
+  /** Default band-store bucket count of `startIncremental` and
+    * `compactStore`: Spark's default
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`. With more
+    * partition directories than that, every read of the store lists them
+    * in a Spark job with one task per directory; at or below it the driver
+    * lists them itself. Each directory also costs one part file per append
+    * and per compaction. */
+  val DefaultStoreBuckets = 32
+
   /** Band-store partition-layout bucket of a band key: the store is laid
     * out as `bucket = pmod(bkey, storeBuckets)` partitions so a delta's
     * candidate join prunes to the directories its keys can possibly match
     * — the parquet-seam analog of an Iceberg `bucket(N, bkey)` spec
     * (reference analog: the per-file cache's keyed lookups,
-    * similarity_engine.py:40-62, which never rescan unrelated entries). */
+    * similarity_engine.py:40-62, which never rescan unrelated entries).
+    * Every conversation adds bands + 4 uniform keys (68 under the balanced
+    * config), so a delta of d conversations touches about
+    * N·(1 − e^(−68d/N)) of N buckets: at N = 256 that is 60 for d = 1, 167
+    * for d = 4 and all of them from d ≈ 20; at the default N = 32 it is 28
+    * for d = 1 and all of them from d ≈ 3. Pruning therefore pays only for
+    * deltas of a few conversations, while the per-directory listing and
+    * write costs grow with N at every delta size — hence the small
+    * default (`DefaultStoreBuckets`). */
   private def bandBucket(bkey: Column, storeBuckets: Int): Column =
     pmod(bkey, lit(storeBuckets.toLong)).cast("int")
 
@@ -296,6 +313,10 @@ object StreamingDedup {
   /** Bucket-pruned view of the accumulated band store for a batch delta:
     * directory-level partition pruning on the delta's bucket set (≤
     * storeBuckets values, computed FROM the delta — one tiny distinct).
+    * It skips directories only when the delta misses some buckets, i.e.
+    * for deltas of a few conversations (see `bandBucket`); larger deltas
+    * read every directory, which the small default bucket count keeps
+    * cheap.
     * A store without a `bucket` column degrades to a full scan with
     * identical semantics (defense-in-depth only — requireBucketLayout
     * refuses to START a stream over a legacy flat store, because APPENDING
@@ -364,9 +385,14 @@ object StreamingDedup {
    * against the delta's keys (no shuffle, no recompute — the store is laid
    * out as pmod(bkey, storeBuckets) partitions, so only directories the
    * delta's keys can match are opened; an Iceberg seam does the same via a
-   * bucket(N, bkey) spec with manifest pruning); fingerprint evidence is
-   * fetched ONLY for matched conv_ids (broadcast semi-join pushdown into
-   * the log scan); the already-seen-pair check prunes the pairs table to
+   * bucket(N, bkey) spec with manifest pruning). At the default
+   * `DefaultStoreBuckets` (32) directories the store is listed on the
+   * driver rather than by a one-task-per-directory listing job, and a
+   * delta of three or more conversations opens every directory anyway
+   * (see `bandBucket`); fingerprint evidence is
+   * fetched ONLY for matched conv_ids (their ids are collected once and
+   * broadcast as a local relation into a semi-join on the log scan); the
+   * already-seen-pair check prunes the pairs table to
    * rows touching matched convs before a broadcast anti-join. The delta's
    * band rows are spread by bucket before they are checkpointed
    * (`bucketedBands`), so the append adds at most ONE part file per touched
@@ -383,7 +409,7 @@ object StreamingDedup {
                        storeTbl: String, pairsTbl: String,
                        cfg: DedupConfig = DedupConfig.balanced,
                        maxDist: Int = 3,
-                       storeBuckets: Int = 256)
+                       storeBuckets: Int = DefaultStoreBuckets)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val bandsTbl = s"${storeTbl}_bands"
     // Bucket-layout guard: the delta's bucket filter is only correct when
@@ -494,9 +520,14 @@ object StreamingDedup {
           val nCand = candIds.count()
           val nFresh = if (nCand > 0) {
             // latest fingerprints for EXACTLY the convs in play: the log is
-            // pruned by a broadcast semi-join before the per-conv window
+            // pruned by a broadcast semi-join before the per-conv window.
+            // The endpoint ids (≤ 2·nCand rows, which a broadcast collects to
+            // the driver anyway) are collected ONCE, so the semi-joins below
+            // share one local relation instead of each broadcast recomputing
+            // the union and distinct in a job of its own
             val ids = candIds.select(col("conv_a").as("conv_id"))
               .union(candIds.select(col("conv_b").as("conv_id"))).distinct()
+              .as[String].collect().toSeq.toDF("conv_id")
             val inPlay = delta.join(broadcast(ids), Seq("conv_id"), "left_semi")
             val fpUniverse =
               if (provider.exists(spark, storeTbl))
@@ -541,13 +572,17 @@ object StreamingDedup {
    * band rows — they only cost extra candidate ids, but a long-running
    * stream should shed them periodically), and the pairs table dedupes.
    * Run it between micro-batch windows (e.g. from a maintenance trigger);
-   * all inputs are materialized before their table is overwritten.
+   * all inputs are materialized before their table is overwritten. The band
+   * table is rewritten as one part file per bucket, `storeBuckets` files at
+   * most (`DefaultStoreBuckets`, 32, by default). A store written under a
+   * different modulus is re-laid out by one call with the new value, which
+   * also restamps the `_meta` modulus that `startIncremental` checks.
    */
   def compactStore(spark: org.apache.spark.sql.SparkSession,
                    provider: graft.sources.TableProvider,
                    storeTbl: String, pairsTbl: String,
                    cfg: DedupConfig = DedupConfig.balanced,
-                   storeBuckets: Int = 256): Unit = {
+                   storeBuckets: Int = DefaultStoreBuckets): Unit = {
     val bandsTbl = s"${storeTbl}_bands"
     if (provider.exists(spark, storeTbl)) {
       val latest = latestPerConv(provider.read(spark, storeTbl))

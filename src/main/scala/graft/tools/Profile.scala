@@ -14,9 +14,10 @@ import graft.sources.ConversationGen
   * Dev-only: graft.Bench stays the official harness. Modes:
   *   pipeline [nBase] [reps]    runPipelined `reps` times over CorpusSpec(nBase, 60, 400),
   *                              rep 0 cold; per rep one line per stage metric + one `tasks` line
-  *   queries [planDir] [name…]  fills the pipeline memo, then one cold and two warm noop writes
-  *                              per SparkEntry.queries entry over SPARK_GRAFT_SF_DIR, and a
-  *                              formatted plan per query into planDir when it is non-empty
+  *   queries [planDir] [name…]  fills the pipeline memo, then one cold (n-gram Jaccard memo
+  *                              dropped first) and two warm noop writes per SparkEntry.queries
+  *                              entry over SPARK_GRAFT_SF_DIR, and a formatted plan per query
+  *                              into planDir when it is non-empty
   *   plans <outDir> [nBase]     formatted plans of the pipeline-internal stages
   * SPARK_GRAFT_CPUS sets local[n] (default: all cores). */
 object Profile {
@@ -94,6 +95,9 @@ object Profile {
       .map { case (name, fn) =>
         spark.sparkContext.setJobDescription(s"profile: $name")
         def run() = timed(fn(spark, sfDir).write.format("noop").mode("overwrite").save())._2
+        // the n-gram Jaccard memo is filled by whichever of its readers ran
+        // first; dropping it keeps every cold sample cold
+        SparkEntry.evictJaccardMemo(spark, sfDir)
         val (cold, warm, warm2) = (run(), run(), run())
         planDir.foreach(d => Files.writeString(Paths.get(d, s"$name.txt"),
           fn(spark, sfDir).queryExecution.explainString(FormattedMode)))

@@ -13,12 +13,9 @@ import graft.sources.ConversationGen
  */
 class ResumeSpec extends SparkSpec {
 
-  private def tmpDir() =
-    Files.createTempDirectory("graft_ck_").toAbsolutePath.toString
-
   test("re-run with same input+config resumes from checkpoints, identical output") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = tempDir("graft_ck_")
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
     val r1 = Pipeline.run(turns, DedupConfig.balanced, Some(dir), runId = "r1")
     val t1 = r1.tiered.select($"pair_key", $"tier").as[(String, String)].collect().sorted.toSeq
@@ -52,7 +49,7 @@ class ResumeSpec extends SparkSpec {
 
   test("pipelined mode resumes from stage checkpoints after a kill (VERDICT r02 #3)") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = tempDir("graft_ck_")
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
     val r1 = Pipeline.runPipelined(turns, DedupConfig.balanced,
       runId = "p1", checkpointDir = Some(dir))
@@ -90,7 +87,7 @@ class ResumeSpec extends SparkSpec {
 
   test("hashOverride keys the checkpoint namespace with no content scan") {
     import spark.implicits._
-    val dir = tmpDir()
+    val dir = tempDir("graft_ck_")
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
     val cfg = DedupConfig.balanced
     val r1 = Pipeline.runPipelined(turns, cfg, runId = "s1",
@@ -114,7 +111,7 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("different cacheVersion or input invalidates the checkpoint") {
-    val dir = tmpDir()
+    val dir = tempDir("graft_ck_")
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
     val cfg = DedupConfig.balanced
     Pipeline.run(turns, cfg, Some(dir), runId = "a")
@@ -130,7 +127,7 @@ class ResumeSpec extends SparkSpec {
   }
 
   test("changed config knob invalidates stage tables; unchanged config resumes (VERDICT r03 wrong #1)") {
-    val dir = tmpDir()
+    val dir = tempDir("graft_ck_")
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
     val cfg = DedupConfig.balanced
     Pipeline.run(turns, cfg, Some(dir), runId = "a")
@@ -181,7 +178,7 @@ class ResumeSpec extends SparkSpec {
 
   test("empty (but active) groups table keys deterministically, no NPE (ADVICE r04)") {
     import org.apache.spark.sql.types._
-    val dir = tmpDir()
+    val dir = tempDir("graft_ck_")
     val turns = ConversationGen.corpus(spark, ConversationGen.smoke)
     // zero-row groups table with suppression ACTIVE: bit_xor over no rows
     // is NULL — groupsFingerprint must coalesce, not throw, and the run

@@ -22,4 +22,20 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = TestSpark.spark
+
+  private val tempDirs = scala.collection.mutable.ArrayBuffer[java.nio.file.Path]()
+
+  /** A fresh directory under java.io.tmpdir (absolute path), deleted with
+    * everything in it when the spec ends. */
+  def tempDir(prefix: String): String = tempDirs.synchronized {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toAbsolutePath
+    tempDirs += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.synchronized {
+      tempDirs.foreach(d => org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+      tempDirs.clear()
+    } finally super.afterAll()
 }

@@ -142,7 +142,7 @@ class StreamingSpec extends SparkSpec {
   test("a dup arriving in a later micro-batch pairs against the earlier corpus (LSH handoff)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_").toString
+    val dir = tempDir("graft_stream_")
     val provider = new graft.sources.ParquetDirProvider(dir, "")
     val base = (0 until 40).map(i => graft.sources.ConversationGen.word(i * 7 % 800)).mkString(" ")
     val other = (0 until 40).map(i => graft.sources.ConversationGen.word(2000 + i * 11 % 800)).mkString(" ")
@@ -174,7 +174,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.model.DedupConfig
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc_").toString
+    val dir = tempDir("graft_inc_")
     val provider = new graft.sources.ParquetDirProvider(dir, "")
     val cfg = DedupConfig.balanced
     val keysPerConv = cfg.bands + 4 // LSH bands + 4 simhash chunks
@@ -263,7 +263,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     import graft.model.DedupConfig
-    val dir = java.nio.file.Files.createTempDirectory("graft_prune_").toString
+    val dir = tempDir("graft_prune_")
     val provider = new graft.sources.ParquetDirProvider(dir, "")
     val cfg = DedupConfig.balanced
     val storeBuckets = 256
@@ -378,7 +378,7 @@ class StreamingSpec extends SparkSpec {
       ids.map(id => turn(id, 0, text(1000 * id.drop(1).toInt + 17)))
 
     // through a running stream (its micro-batches run with AQE off)
-    val sDir = java.nio.file.Files.createTempDirectory("graft_onefile_s_").toString
+    val sDir = tempDir("graft_onefile_s_")
     val sProv = new graft.sources.ParquetDirProvider(sDir, "")
     val input = MemoryStream[Turn]
     val q = StreamingDedup.startIncremental(
@@ -401,7 +401,7 @@ class StreamingSpec extends SparkSpec {
     assert(streamScanned.count(_ > 0) >= 3, s"scans must open files: $streamScanned")
 
     // through direct applyBatch calls on the test session (AQE on)
-    val dDir = java.nio.file.Files.createTempDirectory("graft_onefile_d_").toString
+    val dDir = tempDir("graft_onefile_d_")
     val dProv = new graft.sources.ParquetDirProvider(dDir, "")
     val directScanned = batches.zipWithIndex.map { case (ids, i) =>
       val before = bucketFiles(dDir)
@@ -426,7 +426,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("bucket-layout guard: mismatched storeBuckets fails loudly, compaction re-layouts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_meta_").toString
+    val dir = tempDir("graft_meta_")
     val provider = new graft.sources.ParquetDirProvider(dir, "")
     // first start persists the modulus; a same-value restart is fine
     StreamingDedup.requireBucketLayout(spark, provider, "fp_store_bands", 256)
@@ -448,10 +448,40 @@ class StreamingSpec extends SparkSpec {
     StreamingDedup.requireBucketLayout(spark, provider, "fp_store_bands", 128)
   }
 
+  test("band store at the default bucket count is listed on the driver; above the listing threshold by a job") {
+    import spark.implicits._
+    import graft.model.DedupConfig
+    import org.apache.spark.metrics.source.HiveCatalogMetrics
+    val cfg = DedupConfig.balanced
+    def text(seed: Int) =
+      (0 until 40).map(i => graft.sources.ConversationGen.word(seed + i * 7 % 800)).mkString(" ")
+    // parallel partition-listing jobs run by two direct batches of six
+    // convs each (408 band keys per batch), the second against the store
+    // the first created
+    def listingJobs(storeBuckets: Int): Long = {
+      val provider = new graft.sources.ParquetDirProvider(tempDir("graft_listing_"), "")
+      val before = HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount
+      Seq(0 until 6, 6 until 12).zipWithIndex.foreach { case (ids, b) =>
+        StreamingDedup.applyBatch(
+          StreamingDedup.incrementalFingerprints(spark.createDataset(
+            ids.map(i => turn(s"l$i", 0, text(1000 * i + 17))))).toDF(),
+          b.toLong, provider, "fp_store", "dup_pairs", cfg, 3, storeBuckets)
+      }
+      HiveCatalogMetrics.METRIC_PARALLEL_LISTING_JOB_COUNT.getCount - before
+    }
+    val atDefault = listingJobs(StreamingDedup.DefaultStoreBuckets)
+    assert(atDefault == 0,
+      s"a ${StreamingDedup.DefaultStoreBuckets}-bucket store ran $atDefault parallel listing jobs")
+    assert(listingJobs(256) > 0, "a 256-bucket store must be listed by a Spark job")
+    val threshold = spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+    assert(StreamingDedup.DefaultStoreBuckets <= threshold,
+      s"DefaultStoreBuckets ${StreamingDedup.DefaultStoreBuckets} > listing threshold $threshold")
+  }
+
   test("re-delivered micro-batch is a no-op: the batchlog row is the commit marker (ADVICE r04)") {
     import spark.implicits._
     import graft.model.DedupConfig
-    val dir = java.nio.file.Files.createTempDirectory("graft_idem_").toString
+    val dir = tempDir("graft_idem_")
     val provider = new graft.sources.ParquetDirProvider(dir, "")
     val cfg = DedupConfig.balanced
     def text(seed: Int) =
@@ -497,7 +527,7 @@ class StreamingSpec extends SparkSpec {
 
   test("a legacy flat band store is refused at stream start (compactStore migrates)") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_").toString
+    val dir = tempDir("graft_legacy_")
     val provider = new graft.sources.ParquetDirProvider(dir, "")
     // a pre-bucketing store: flat part files, no bucket column, no meta —
     // appending bucket=N/ subdirectories next to these would corrupt
